@@ -83,8 +83,7 @@ final class BucketedProvenance(
   def appendResponses(rows: DataFrame): DataFrame = {
     val base = maxId(responsesName)
     val withIds = ProvenanceStore.pinIds(
-      ProvenanceStore.withIdColumn(rows, base,
-        Seq("provider", "item_index", "stage", "url"), idMode)
+      ProvenanceStore.withIdColumn(rows, base, ProvenanceStore.responseOrder, idMode)
         .withColumn("created_at", current_timestamp())
         .select(Model.responsesSchema.fieldNames.toIndexedSeq.map(col)
           :+ col("item_index") :+ col("stage"): _*),
@@ -103,8 +102,7 @@ final class BucketedProvenance(
       .dropDuplicates("source_url", "sha256")
       .join(existing, Seq("source_url", "sha256"), "left_anti")
     val withIds = ProvenanceStore.pinIds(
-      ProvenanceStore.withIdColumn(fresh, base,
-        Seq("provider", "source_url", "sha256"), idMode)
+      ProvenanceStore.withIdColumn(fresh, base, ProvenanceStore.artifactOrder, idMode)
         .withColumn("created_at", current_timestamp())
         .select(Model.artifactsSchema.fieldNames.toIndexedSeq.map(col): _*),
       idMode)

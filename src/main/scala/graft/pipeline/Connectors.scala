@@ -13,6 +13,9 @@ import Model._
   *
   * extract() output contract: item_index, response_id, source_url,
   * artifact_url (null → parse error), error_message (null → ok).
+  * `Runner` extracts from the fetched metadata rows before their responses
+  * are appended, so there `id` (and hence `response_id`) is a typed null;
+  * it takes the dead letters' response ids from the append.
   */
 trait Connector extends Serializable {
   def name: String

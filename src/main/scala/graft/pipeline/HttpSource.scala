@@ -348,8 +348,7 @@ object HttpSource {
   /** Flat JSON object → query string (reference relies on httpx params=;
     * the Spark-side FetchRequest carries them as params_json). */
   private[pipeline] def appendQuery(url: String, paramsJson: String): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(paramsJson)
+    val node = Json.mapper.readTree(paramsJson)
     if (node == null || !node.isObject) url
     else {
       import scala.jdk.CollectionConverters._
@@ -386,17 +385,6 @@ object HttpSource {
     * json.dumps(sort_keys=True), http_client.py:152). */
   def headersJson(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${escape(k)}": "${escape(v)}"""" }
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
       .mkString("{", ", ", "}")
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
 }

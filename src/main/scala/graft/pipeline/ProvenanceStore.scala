@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,7 +69,7 @@ final class ProvenanceStore(
       .option("warehouse", warehouseDir).option("table", table).load()
       .agg(coalesce(max(col("id")), lit(0L))).head().getLong(0)
 
-  private def withIdColumn(rows: DataFrame, base: Long, orderCols: Seq[String]): DataFrame =
+  private def withIdColumn(rows: DataFrame, base: Long, orderCols: Seq[Column]): DataFrame =
     ProvenanceStore.withIdColumn(rows, base, orderCols, idMode)
 
   private def pinIds(stamped: DataFrame): DataFrame =
@@ -81,8 +81,7 @@ final class ProvenanceStore(
     * Returns the appended rows WITH ids (for FK propagation, J1/J2). */
   def appendResponses(rows: DataFrame): DataFrame = {
     val base = maxId("responses")
-    val withIds = pinIds(withIdColumn(rows, base,
-      Seq("provider", "item_index", "stage", "url"))
+    val withIds = pinIds(withIdColumn(rows, base, ProvenanceStore.responseOrder)
       .withColumn("created_at", current_timestamp())
       .select(Model.responsesSchema.fieldNames.toIndexedSeq.map(col) :+ col("item_index") :+ col("stage"): _*))
     withIds.drop("item_index", "stage")
@@ -110,8 +109,7 @@ final class ProvenanceStore(
     val fresh = rows
       .dropDuplicates("source_url", "sha256")
       .join(existing, Seq("source_url", "sha256"), "left_anti")
-    val withIds = withIdColumn(fresh, base,
-      Seq("provider", "source_url", "sha256"))
+    val withIds = withIdColumn(fresh, base, ProvenanceStore.artifactOrder)
       .withColumn("created_at", current_timestamp())
       .select(Model.artifactsSchema.fieldNames.toIndexedSeq.map(col): _*)
     withIds.write.mode(SaveMode.Append).parquet(artifactsPath)
@@ -236,16 +234,25 @@ object ProvenanceStore {
     case object Contiguous extends IdMode
   }
 
+  /** Declared Contiguous-mode orderings. Within an item, its metadata
+    * response precedes its artifact response, as the reference's per-item
+    * loop inserts them (pipeline.py:14–64), also when one append carries
+    * both stages. */
+  private[pipeline] val responseOrder: Seq[Column] = Seq(col("provider"),
+    col("item_index"), when(col("stage") === "metadata", 0).otherwise(1), col("url"))
+  private[pipeline] val artifactOrder: Seq[Column] =
+    Seq(col("provider"), col("source_url"), col("sha256"))
+
   /** Stamp an `id` column per the selected scheme. `orderCols` only orders
     * the Contiguous scheme; Partitioned ids derive from physical placement.
     * Shared by the file layout here and [[BucketedProvenance]]. */
   private[pipeline] def withIdColumn(
-      rows: DataFrame, base: Long, orderCols: Seq[String], idMode: IdMode): DataFrame =
+      rows: DataFrame, base: Long, orderCols: Seq[Column], idMode: IdMode): DataFrame =
     idMode match {
       case IdMode.Partitioned =>
         rows.withColumn("id", monotonically_increasing_id() + lit(base + 1L))
       case IdMode.Contiguous =>
-        val w = Window.orderBy(orderCols.map(col): _*)
+        val w = Window.orderBy(orderCols: _*)
         rows.withColumn("id", row_number().over(w).cast("long") + lit(base))
     }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Two forms:
   * - [[redactMap]]: pure column expression (`transform_values`) for
-  *   MapType header columns — codegen'd, no UDF, the hot path.
+  *   MapType header columns — codegen'd, no UDF.
   * - [[redactJsonUdf]]: recursive walk over arbitrary nested JSON strings
   *   (dict/list at any depth) — the only Layer-A operation that genuinely
   *   needs driver-defined code (SURVEY.md §2.6 X1); Jackson ships with
@@ -37,21 +37,21 @@ object Redaction {
       (acc, s) => acc || lk === s)
   }
 
-  /** Recursive JSON-string redaction UDF. Invalid JSON passes through
-    * unchanged (mirrors the reference's defensive parsing). */
+  /** Recursive JSON-string redaction UDF over the shared [[Json.mapper]].
+    * Invalid JSON passes through unchanged (mirrors the reference's
+    * defensive parsing). */
   val redactJsonUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (json: String) =>
       if (json == null) null
       else
         try {
-          val mapper = new ObjectMapper()
-          val tree = mapper.readTree(json)
-          redactNode(mapper, tree)
-          mapper.writeValueAsString(tree)
+          val tree = Json.mapper.readTree(json)
+          redactNode(tree)
+          Json.mapper.writeValueAsString(tree)
         } catch { case _: Exception => json }
     }
 
-  private def redactNode(mapper: ObjectMapper, node: JsonNode): Unit = node match {
+  private def redactNode(node: JsonNode): Unit = node match {
     case o: ObjectNode =>
       val names = o.fieldNames()
       val toRedact = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -59,12 +59,12 @@ object Redaction {
         val name = names.next()
         val child = o.get(name)
         if (isSensitive(name) && child.isValueNode) toRedact += name
-        else redactNode(mapper, child)
+        else redactNode(child)
       }
       toRedact.foreach(n => o.put(n, Model.redactedValue))
     case a: ArrayNode =>
       val it = a.elements()
-      while (it.hasNext) redactNode(mapper, it.next())
+      while (it.hasNext) redactNode(it.next())
     case _ =>
   }
 }

@@ -95,4 +95,29 @@ class CaptureSinkSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(Files.exists(Paths.get(dir, "responses", "0001_get.raw.bin")))
     assert(!Files.exists(Paths.get(dir, "responses", "0001_get.json")))
   }
+
+  test("the capture pass writes the redacted attempts manifest and counts its lines") {
+    val dir = Files.createTempDirectory("cap").toString
+    val n = CaptureSink.writeCaptures(Seq(
+      fetch(0, "metadata", "GET", "ok".getBytes, attempts = 3),
+      fetch(1, "artifact", "GET", "doc".getBytes,
+        headers = Map("Set-Cookie" -> "sid=1", "Content-Type" -> "text/html"))).toDS(), dir)
+    assert(n == 4, "one line per attempt, counted once")
+    val lines = new String(Files.readAllBytes(
+      Paths.get(dir, "attempts", "part-00000.json")), "UTF-8")
+    assert(!lines.contains("secret-token") && !lines.contains("sid=1"))
+    assert(!lines.contains("null"), "null fields are omitted")
+    val df = spark.read.json(s"$dir/attempts")
+    assert(df.count() == 4)
+    assert(df.columns.toSet == Set("provider", "item_index", "stage", "method", "url",
+      "attempt_number", "status_code", "request_headers", "response_headers"))
+    val rows = df.orderBy("item_index", "attempt_number")
+      .select("item_index", "attempt_number", "status_code",
+        "request_headers.Authorization", "response_headers.Set-Cookie")
+      .as[(Long, Long, Long, String, String)].collect().toSeq
+    assert(rows.map(r => (r._1, r._2, r._3)) ==
+      Seq((0L, 1L, 500L), (0L, 2L, 500L), (0L, 3L, 200L), (1L, 1L, 200L)))
+    assert(rows.forall(_._4 == Model.redactedValue))
+    assert(rows.last._5 == Model.redactedValue)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.pipeline._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,6 +47,39 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(manifest.count() == 1)
     assert(manifest.columns.toSet == Set("source_url", "sha256", "blob_path"))
     assert(manifest.head().getAs[String]("sha256") == sha)
+    // attempts manifest: one JSON line per attempt, written by the capture pass
+    val attempts = spark.read.json(s"${res.runDir}/attempts")
+    assert(attempts.count() == res.attempts)
+    // offline attempts send no request headers: `{}`, which schema
+    // inference drops, as it did for the map column Spark's writer wrote
+    assert(attempts.columns.toSet == Set("provider", "item_index", "stage", "method",
+      "url", "attempt_number", "status_code", "response_headers"))
+    assert(attempts.select("stage").as[String].collect().sorted.toSeq ==
+      Seq("artifact", "metadata"))
+  }
+
+  test("one offline Runner.run makes exactly 8 SQL executions") {
+    // responses append (max-id probe, id pin, parquet write), artifacts
+    // append with the blob writes (max-id probe, parquet write), the capture
+    // pass with the attempts manifest, and the two JSON manifests
+    val wh = tmpDir("wh"); val blobs = tmpDir("blobs"); val runs = tmpDir("runs")
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            executions.incrementAndGet()
+          case _ =>
+        }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val res = Runner.run(spark, SecEdgarConnector, 1, fixtures, wh, blobs, runs)
+      assert(res.status == "succeeded")
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(executions.get() == 8, s"SQL executions per run: ${executions.get()}")
   }
 
   test("nrc_adams_aps offline e2e: 2 responses, 1 artifact") {
@@ -70,6 +104,37 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(res.parseErrors == 1)
     val errs = spark.read.json(s"${res.runDir}/parse_errors")
     assert(errs.filter(col("provider") === "sec_edgar").count() == 1)
+    // every dead letter points at its metadata-stage response
+    val responses = new ProvenanceStore(spark, wh).responses
+    val joined = errs.join(responses, errs("response_id") === responses("id"))
+      .select(responses("url")).as[String].collect().toSeq
+    assert(joined == Seq("https://data.sec.gov/submissions/CIK0000320193.json"))
+  }
+
+  test("parse errors take the response id of their own item's metadata row") {
+    // four items, each with its own submissions fixture; items 1 and 3 are
+    // corrupted. Metadata and artifact responses share one append, so the
+    // dead letters must find their item's metadata id among both stages.
+    val fx = tmpDir("fx")
+    Files.createDirectories(Paths.get(s"$fx/sec_edgar"))
+    val good = Files.readAllBytes(Paths.get(s"$fixtures/sec_edgar/submissions.json"))
+    Files.copy(Paths.get(s"$fixtures/sec_edgar/artifact.htm"),
+      Paths.get(s"$fx/sec_edgar/artifact.htm"))
+    (0 until 4).foreach { i =>
+      Files.write(Paths.get(s"$fx/sec_edgar/sub$i.json"),
+        if (i % 2 == 1) "{}".getBytes else good)
+    }
+    val wh = tmpDir("wh"); val blobs = tmpDir("blobs"); val runs = tmpDir("runs")
+    val res = Runner.run(spark, PerItemSecConnector, 4, fx, wh, blobs, runs)
+    assert(res.status == "succeeded")
+    assert(res.responses == 6, "4 metadata + 2 artifact responses")
+    assert(res.parseErrors == 2)
+    val errs = spark.read.json(s"${res.runDir}/parse_errors")
+    val responses = new ProvenanceStore(spark, wh).responses
+    val byItem = errs.join(responses, errs("response_id") === responses("id"))
+      .select(errs("item_index").cast("int"), responses("url"))
+      .as[(Int, String)].collect().toMap
+    assert(byItem == Map(1 -> PerItemSecConnector.url(1), 3 -> PerItemSecConnector.url(3)))
   }
 
   test("fault injection: corrupted APS fixture degrades gracefully") {
@@ -100,6 +165,24 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(ids.forall(_ > 0))
   }
 
+  test("a blob dir deleted between two runs of the same ingest is restored") {
+    val wh = tmpDir("wh"); val blobs = tmpDir("blobs"); val runs = tmpDir("runs")
+    Runner.run(spark, SecEdgarConnector, 1, fixtures, wh, blobs, runs)
+    Files.walk(Paths.get(blobs)).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    val r2 = Runner.run(spark, SecEdgarConnector, 1, fixtures, wh, blobs, runs)
+    assert(r2.artifacts == 0, "the artifact row already exists")
+    val shas = new ProvenanceStore(spark, wh).artifacts
+      .select("sha256").distinct().as[String].collect().toSet
+    val stream = Files.walk(Paths.get(blobs))
+    val blobFiles =
+      try stream.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString).toSet
+      finally stream.close()
+    assert(shas.nonEmpty && blobFiles == shas,
+      s"blob set $blobFiles must equal the distinct sha256 set $shas")
+  }
+
   test("contiguous id mode (SQLite parity): ids 1..4 across two appends, FK join green") {
     val wh = tmpDir("wh"); val blobs = tmpDir("blobs"); val runs = tmpDir("runs")
     val mode = ProvenanceStore.IdMode.Contiguous
@@ -108,6 +191,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val store = new ProvenanceStore(spark, wh, mode)
     val ids = store.responses.select("id").as[Long].collect().sorted
     assert(ids.toSeq == Seq(1L, 2L, 3L, 4L), "AUTOINCREMENT-parity contiguity")
+    // one append per run carries both stages; within an item the metadata
+    // response comes first, as in the reference's per-item loop
+    val urls = store.responses.orderBy("id").select("url").as[String].collect().toSeq
+    assert(urls.map(_.contains("/submissions/")) == Seq(true, false, true, false), urls)
     // J1 under the contiguous scheme
     val joined = store.artifacts.as("a")
       .join(store.responses.as("r"), col("a.response_id") === col("r.id"))
@@ -286,6 +373,31 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val runJson = new String(
       Files.readAllBytes(runDir.toPath.resolve("run.json")), "UTF-8")
     assert(runJson.contains("\"status\": \"failed\""))
+    assert(runJson.contains("\"failed_stage\": \"responses\""))
+    assert(runJson.contains("\"responses\": null"), "no sink finished")
+  }
+
+  test("a failure after the responses write keeps its partial counts in run.json (K12)") {
+    val wh = tmpDir("wh"); val runs = tmpDir("runs")
+    intercept[Exception] {
+      // unwritable blob root → the artifacts append's blob writes throw
+      Runner.run(spark, SecEdgarConnector, 1, fixtures, wh,
+        "/proc/graft-invalid/blobs", runs)
+    }
+    val runDir = new java.io.File(runs).listFiles().head.toPath
+    assert(Files.exists(runDir.resolve("error.txt")))
+    val runJson = spark.read.option("multiLine", "true")
+      .json(runDir.resolve("run.json").toString).head()
+    assert(runJson.getAs[String]("status") == "failed")
+    assert(runJson.getAs[String]("failed_stage") == "artifacts")
+    val counts = runJson.getAs[org.apache.spark.sql.Row]("counts")
+    assert(counts.getAs[Long]("responses") == 2L, "metadata + artifact responses were written")
+    Seq("attempts", "artifacts", "parse_errors").foreach { k =>
+      assert(counts.isNullAt(counts.fieldIndex(k)), s"$k never finished: $counts")
+    }
+    val store = new ProvenanceStore(spark, wh)
+    assert(store.responses.count() == 2)
+    assert(store.artifacts.count() == 0, "no artifact row without its blob")
   }
 
   test("attempts capture redacts sensitive headers") {
@@ -482,6 +594,26 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(d1.endsWith("20260102T030405Z"))
     assert(d2.endsWith("20260102T030405Z-1"))
   }
+}
+
+/** SEC shape with one submissions fixture and one CIK per planned item
+  * (`sub<i>.json`, CIK 10<i>), so each metadata response has its own url. */
+object PerItemSecConnector extends Connector {
+  import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+  import Model._
+  val name = SecEdgarConnector.name
+  val artifactFixture = SecEdgarConnector.artifactFixture
+  def url(i: Int): String = f"https://data.sec.gov/submissions/CIK${100 + i}%010d.json"
+  def plan(spark: SparkSession, limit: Int): Dataset[PlanItem] = {
+    import spark.implicits._
+    (0 until limit).map(i => PlanItem(name, i, f"""{"cik10": "${100 + i}%010d"}""")).toDS()
+  }
+  def metadataRequests(spark: SparkSession, items: Dataset[PlanItem]): Dataset[FetchRequest] = {
+    import spark.implicits._
+    items.map(it => FetchRequest(name, it.item_index, "metadata", "GET",
+      PerItemSecConnector.url(it.item_index), it.params_json, s"sub${it.item_index}.json"))
+  }
+  def extract(responses: DataFrame): DataFrame = SecEdgarConnector.extract(responses)
 }
 
 /** JVM-wide recorder the executor-side transport writes into (local mode
